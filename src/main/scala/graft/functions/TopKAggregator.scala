@@ -1,7 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{Column, Encoder, Encoders, GraftSql}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StructType}
 
 import scala.collection.mutable
 
@@ -129,4 +136,116 @@ class TopKPairsAggregator(k: Int)
 
   override def outputEncoder: Encoder[Seq[(Double, Long)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+}
+
+/** Per-group bounded SMALLEST-k over whole rows, as a native
+  * `TypedImperativeAggregate`: the `row` structs of the k smallest `key`s
+  * in rank order — exactly the rows of `row_number() over (partition by
+  * group order by key) <= k`, in row_number order (tied keys may take
+  * either row). The buffer is a k-entry max-heap, so it is O(k) rows per
+  * group per task however large the group; it combines map-side and
+  * ships at most k rows per group per partition, where the window form
+  * exchanges and sorts every row of every group. This is the pipeline's
+  * stratified sample (top-100 listings per state under a seeded-random
+  * key).
+  *
+  * Native rather than a typed `Aggregator` like the two above because
+  * its input is a whole row: an `Aggregator` deserializes every input
+  * row to a JVM `Row` (12 decoded strings per listing) before it can
+  * compare the key. Here the key is compared first, and only a row that
+  * enters the heap is evaluated and copied (as an `UnsafeRow`).
+  *
+  * Keys rank as SQL `ORDER BY key ASC` does: −0.0 ≡ +0.0 (`v + 0.0`), NaN
+  * greatest, after +Infinity (`Double.compare`). The key must be a
+  * non-nullable DOUBLE, so no null has to be placed. */
+case class SmallestK(key: Expression, row: Expression, k: Int,
+                     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[mutable.PriorityQueue[(Double, UnsafeRow)]]
+    with BinaryLike[Expression] {
+
+  private type Heap = mutable.PriorityQueue[(Double, UnsafeRow)]
+
+  override def left: Expression = key
+  override def right: Expression = row
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (key.dataType, key.nullable, row.dataType) match {
+      case (DoubleType, false, _: StructType) if k > 0 => TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"smallest_k needs a non-nullable DOUBLE key, a STRUCT row and k > 0, got " +
+        s"${key.dataType.sql}${if (key.nullable) " (nullable)" else ""}, ${row.dataType.sql}, k = $k")
+    }
+
+  private def rowType = row.dataType.asInstanceOf[StructType]
+  @transient private lazy val toUnsafe = UnsafeProjection.create(rowType)
+
+  // max-heap on the key: `head` is the largest key kept
+  override def createAggregationBuffer(): Heap =
+    mutable.PriorityQueue.empty(Ordering.by[(Double, UnsafeRow), Double](_._1)(
+      Ordering.Double.TotalOrdering))
+
+  private def offer(heap: Heap, v: Double, r: => UnsafeRow): Unit =
+    if (heap.size < k) heap.enqueue((v, r))
+    else if (java.lang.Double.compare(v, heap.head._1) < 0) {
+      heap.dequeue()
+      heap.enqueue((v, r))
+    }
+
+  override def update(heap: Heap, input: InternalRow): Heap = {
+    offer(heap, key.eval(input).asInstanceOf[Double] + 0.0,
+      toUnsafe(row.eval(input).asInstanceOf[InternalRow]).copy())
+    heap
+  }
+
+  override def merge(a: Heap, b: Heap): Heap = {
+    b.foreach { case (v, r) => offer(a, v, r) }
+    a
+  }
+
+  override def eval(heap: Heap): Any =
+    new GenericArrayData(heap.toSeq.sortBy(_._1)(Ordering.Double.TotalOrdering).map(_._2))
+
+  override def serialize(heap: Heap): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    out.writeInt(heap.size)
+    heap.foreach { case (v, r) =>
+      val b = r.getBytes
+      out.writeDouble(v)
+      out.writeInt(b.length)
+      out.write(b)
+    }
+    out.flush()
+    bytes.toByteArray
+  }
+
+  override def deserialize(bytes: Array[Byte]): Heap = {
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    val heap = createAggregationBuffer()
+    for (_ <- 0 until in.readInt()) {
+      val v = in.readDouble()
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      val r = new UnsafeRow(rowType.length)
+      r.pointTo(b, b.length)
+      heap.enqueue((v, r))
+    }
+    heap
+  }
+
+  override def dataType: DataType = ArrayType(rowType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "smallest_k"
+
+  override def withNewMutableAggBufferOffset(o: Int): SmallestK = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): SmallestK = copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): SmallestK =
+    copy(key = l, row = r)
+}
+
+object SmallestK {
+
+  /** Column-API form: `smallest_k(key, struct(...), k)`. */
+  def col(key: Column, row: Column, k: Int): Column =
+    GraftSql.column(SmallestK(GraftSql.expression(key), GraftSql.expression(row), k))
 }

@@ -222,4 +222,25 @@ object AlgebraProps extends Properties("graft.algebra") {
                              keyBits(r.getDouble(2)), r.getInt(3))).toSet
       Prop(viaAgg == viaWindow) :| s"agg=$viaAgg window=$viaWindow"
     }
+
+  property("bounded smallest-k rows ≡ row_number window keys, in rank order (±0.0/NaN incl.)") =
+    forAll(rankRows, Gen.chooseNum(1, 4)) { (xs, k) =>
+      import spark.implicits._
+      import org.apache.spark.sql.expressions.Window
+      val df = xs.toDF("g", "key", "id")
+      // tied keys may take either row, so compare each group's ranked
+      // key sequence (canonical bits: −0.0 ≡ +0.0, one NaN) — the
+      // selection is that sequence whatever the tie order
+      def keyBits(v: Double): Long = java.lang.Double.doubleToLongBits(v + 0.0)
+      val viaWindow = df
+        .withColumn("rn", row_number().over(Window.partitionBy("g").orderBy($"key")))
+        .filter($"rn" <= k)
+        .collect().groupBy(_.getLong(0)).map { case (g, rs) =>
+          g -> rs.sortBy(_.getInt(3)).map(r => keyBits(r.getDouble(1))).toSeq }
+      val viaAgg = df.groupBy("g")
+        .agg(graft.functions.SmallestK.col($"key", struct($"g", $"key", $"id"), k).as("s"))
+        .collect().map(r => r.getLong(0) ->
+          r.getSeq[org.apache.spark.sql.Row](1).map(e => keyBits(e.getDouble(1))).toSeq).toMap
+      Prop(viaAgg == viaWindow) :| s"agg=$viaAgg window=$viaWindow"
+    }
 }

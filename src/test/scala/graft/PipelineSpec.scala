@@ -3,6 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.pipeline.{RealEstatePipeline, Retry, Validate}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 import scala.util.{Failure, Success}
 
@@ -12,7 +15,11 @@ import scala.util.{Failure, Success}
   * lacks eligible rows), coverage >= 95 %, leading-zero ZIPs intact. */
 class PipelineSpec extends SparkSpec {
 
-  private lazy val fixtures: (String, String) = {
+  private lazy val fixtures: (String, String) = freshFixtures()
+
+  /** A new copy of the fixtures in a new directory: a run over it cannot
+    * hit a frame that an earlier run over another copy left cached. */
+  private def freshFixtures(): (String, String) = {
     val dir = Files.createTempDirectory("graft-pipeline").toString
     val csv = new StringBuilder(
       "brokered_by,status,price,bed,bath,acre_lot,street,city,state,zip_code,house_size,prev_sold_date\n")
@@ -90,7 +97,7 @@ class PipelineSpec extends SparkSpec {
 
   test("derived price_per_sqft is round(price/size, 2); zips keep leading zeros") {
     val (enriched, _) = result
-    val row = enriched.filter(org.apache.spark.sql.functions.col("brokered_by") === "b0").head()
+    val row = enriched.filter(col("brokered_by") === "b0").head()
     assert(row.getAs[String]("zip_code") === "01002")
     assert(row.getAs[Double]("price_per_sqft") ===
       BigDecimal(300000.0 / 1500).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)
@@ -112,16 +119,19 @@ class PipelineSpec extends SparkSpec {
     assert(miss.left.exists(_.exists(_.contains("rows"))))
   }
 
-  test("audit counts cost one uncached listings-CSV scan, not one per stage") {
-    // Counts csv FileSourceScan nodes across every EXECUTED plan of a
-    // full run, descending through AQE and materialized query stages.
-    // Cache-hidden scans (the InMemoryRelation fill) are deliberately
-    // not counted — a cached read is the opposite of a rescan. The old
-    // per-stage audit issued 4 uncached csv-scanning counts; the folded
-    // conditional agg issues exactly 1.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.FileSourceScanExec
+  test("a run reads the listings CSV exactly once, cache fill included") {
+    // Counts the csv FileSourceScan nodes of every EXECUTED plan of a
+    // full run, descending through AQE, materialized query stages and the
+    // cached plan behind each InMemoryTableScan — each distinct cached
+    // plan once, as its fill is the only execution of its scans. The
+    // stage counts are observed inside the fill, so the fill's scan is
+    // the only one. The run takes fresh fixtures: over the shared ones,
+    // the cached `result` frame of earlier tests could stand in for it.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val seenCaches = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
     def csvScans(p: SparkPlan): Int = {
       val self = p match {
         // CSV-format data scans only: header resolution issues two
@@ -135,6 +145,8 @@ class PipelineSpec extends SparkSpec {
       val kids = p match {
         case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
         case q: QueryStageExec => Seq(q.plan)
+        case m: InMemoryTableScanExec =>
+          Seq(m.relation.cachedPlan).filter(seenCaches.add)
         case other => other.children
       }
       self + kids.map(csvScans).sum
@@ -150,13 +162,16 @@ class PipelineSpec extends SparkSpec {
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     }
+    val (csv, json) = freshFixtures()
     spark.listenerManager.register(listener)
     try {
-      RealEstatePipeline.run(spark, fixtures._1, fixtures._2, samplePerState = 10)
+      val (enriched, _) = RealEstatePipeline.run(spark, csv, json,
+        outDir = Some(Tables.scratch("pipeline_one_scan")), samplePerState = 10)
+      enriched.unpersist()
       // QueryExecutionListener delivery is async; a fixed sleep on a
-      // contended box undercounts and the assertion passes vacuously.
-      // Poll until the count is stable for 2 s (max 20 s) — late events
-      // would move it, and a stable count is the drained state.
+      // contended box undercounts. Poll until the count is stable for
+      // 2 s (max 20 s) — late events would move it, and a stable count
+      // is the drained state.
       var last = -1
       var stableMs = 0
       var waited = 0
@@ -165,13 +180,148 @@ class PipelineSpec extends SparkSpec {
         val cur = scans.get()
         if (cur == last) stableMs += 250 else { stableMs = 0; last = cur }
       }
-      assert(scans.get() >= 1,
-        "no uncached CSV scan observed — listener events never arrived, " +
-        "the assertion below would be vacuous")
-      assert(scans.get() <= 2,
-        s"listings CSV scanned uncached ${scans.get()} times — the stage " +
-        "counts have unfolded back into per-stage actions")
+      assert(scans.get() === 1,
+        s"listings CSV scanned ${scans.get()} times by one run (0 = listener " +
+        "events never arrived; 2+ = the stage counts or the sample rescan it)")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a run retried after a failed attempt reports the clean run's stats") {
+    val (csv, json) = freshFixtures()
+    val (clean, cleanStats) = RealEstatePipeline.run(spark, csv, json, samplePerState = 10)
+    clean.unpersist()
+    val (retried, retriedStats) = RealEstatePipeline.run(spark, csv, json,
+      samplePerState = 10, retrySleep = _ => (),
+      onAttempt = n => if (n == 1) throw new RuntimeException("TaskFailed (transient)"))
+    retried.unpersist()
+    assert(retriedStats === cleanStats)
+  }
+
+  test("back-to-back runs without unpersist (cache reuse) report equal stats") {
+    val (csv, json) = freshFixtures()
+    val (first, firstStats) = RealEstatePipeline.run(spark, csv, json, samplePerState = 10)
+    val (second, secondStats) = RealEstatePipeline.run(spark, csv, json, samplePerState = 10)
+    assert(secondStats === firstStats)
+    assert(firstStats.afterCoverage === 20L && firstStats.joined === 18L)
+    second.unpersist(); first.unpersist()
+  }
+
+  test("audit cascade is loud: a missing observation or a growing count throws") {
+    import org.apache.spark.sql.Row
+    val ok = Map(RealEstatePipeline.StageCounts -> Row(25L, 24L, 21L),
+                 RealEstatePipeline.CoveredCount -> Row(20L))
+    assert(RealEstatePipeline.auditCascade(ok, 18L) === Seq(25L, 24L, 21L, 20L, 18L))
+    val missing = intercept[IllegalStateException] {
+      RealEstatePipeline.auditCascade(ok - RealEstatePipeline.CoveredCount, 18L)
+    }
+    assert(missing.getMessage.contains(RealEstatePipeline.CoveredCount))
+    val grown = intercept[IllegalStateException] {
+      RealEstatePipeline.auditCascade(
+        ok.updated(RealEstatePipeline.StageCounts, Row(25L, 21L, 24L)), 18L)
+    }
+    assert(grown.getMessage.contains("in_states = 21 < cleaned = 24"))
+    intercept[IllegalStateException](RealEstatePipeline.auditCascade(ok, 21L))
+  }
+
+  /** The reference's step 6 as written (`real_estate_etl_job.py:112-115`):
+    * `row_number() over (partition by state order by rand(seed)) <= k`,
+    * inside steps 3–9 exactly as [[RealEstatePipeline.transform]] runs
+    * them. Also returns the row_number of each sampled listing. */
+  private def windowReference(listings: DataFrame, census: DataFrame, k: Int,
+                              seed: Long = 42L): (DataFrame, Map[String, Int]) = {
+    val covered = listings
+      .filter(col("state").isin(RealEstatePipeline.targetStates: _*))
+      .na.drop(Seq("price", "zip_code", "house_size", "bed", "bath"))
+      .join(broadcast(census.select("zip_code").distinct()), Seq("zip_code"), "left_semi")
+    val sampled = covered
+      .withColumn("rn", row_number().over(Window.partitionBy("state").orderBy(rand(seed))))
+      .filter(col("rn") <= k)
+    val ranks = sampled.select("brokered_by", "rn").collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toMap
+    val out = sampled.drop("rn")
+      .join(broadcast(census.withColumnRenamed("state", "census_state")), Seq("zip_code"), "left")
+      .withColumn("price_num", expr("try_cast(price AS double)"))
+      .withColumn("size_num", expr("try_cast(house_size AS double)"))
+      .select(
+        col("brokered_by"), col("status"), col("price_num").as("price"),
+        col("bed"), col("bath"), col("acre_lot"), col("street"), col("city"),
+        col("state"), col("zip_code"), col("size_num").as("house_size"),
+        col("prev_sold_date"),
+        col("median_income").as("census_median_income"),
+        col("population").as("census_population"),
+        col("college_educated_pct").as("census_college_pct"),
+        col("unemployment_rate").as("census_unemployment_rate"),
+        col("median_age").as("census_median_age"),
+        round(try_divide(col("price_num"), col("size_num")), 2).as("price_per_sqft"))
+    (out, ranks)
+  }
+
+  /** transform's rows == the window reference's rows, and each state's
+    * rows come out in row_number order. Returns rows per state. */
+  private def assertWindowParity(listings: DataFrame, census: DataFrame,
+                                 k: Int): Map[String, Int] = {
+    val got = RealEstatePipeline.transform(listings, census, samplePerState = k).collect().toSeq
+    val (ref, ranks) = windowReference(listings, census, k)
+    val want = ref.collect().toSeq
+    assert(got.size === want.size)
+    assert(got.map(_.toString).sorted === want.map(_.toString).sorted)
+    got.groupBy(_.getAs[String]("state")).map { case (st, rows) =>
+      assert(rows.map(r => ranks(r.getAs[String]("brokered_by"))) === (1 to rows.size),
+        s"$st rows are not in row_number order")
+      st -> rows.size
+    }
+  }
+
+  test("sample == row_number window reference: fixture, RefScale, k = 1, k > every state") {
+    val listings = RealEstatePipeline.readListings(spark, fixtures._1)
+    val census = RealEstatePipeline.readCensus(spark, fixtures._2)
+    // MA: 12 eligible → capped at 10; CA: 8 eligible → all 8
+    assert(assertWindowParity(listings, census, 10) ===
+      Map("Massachusetts" -> 10, "California" -> 8))
+    assert(assertWindowParity(listings, census, 1) ===
+      Map("Massachusetts" -> 1, "California" -> 1))
+
+    val censusPath = s"${Files.createTempDirectory("graft-refscale")}/census.json"
+    graft.tools.RefScale.writeCensusJson(censusPath)
+    val rsCensus = RealEstatePipeline.readCensus(spark, censusPath)
+    val rsListings = graft.tools.RefScale.listings(spark, 22000L)
+    val perState = Map("Massachusetts" -> 100, "California" -> 100, "New York" -> 100)
+    assert(assertWindowParity(rsListings, rsCensus, 100) === perState)
+    assert(assertWindowParity(rsListings, rsCensus, 1) === perState.map(_._1 -> 1))
+    // k above every state's eligible count keeps every covered row
+    val covered = rsListings.filter(col("state").isin(RealEstatePipeline.targetStates: _*))
+      .na.drop(Seq("price", "zip_code", "house_size", "bed", "bath"))
+      .join(rsCensus.select("zip_code"), Seq("zip_code"), "left_semi")
+      .groupBy("state").count().collect().map(r => r.getString(0) -> r.getLong(1).toInt).toMap
+    assert(covered.values.max < 10000)
+    assert(assertWindowParity(rsListings, rsCensus, 10000) === covered)
+  }
+
+  test("transform plans no sort or window and one listings scan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, SortExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children ++ other.subqueries
+    }).flatMap(nodes)
+    val out = RealEstatePipeline.transform(
+      RealEstatePipeline.readListings(spark, fixtures._1),
+      RealEstatePipeline.readCensus(spark, fixtures._2), samplePerState = 10)
+    assert(out.count() === 18L)
+    val plan = nodes(out.queryExecution.executedPlan)
+    val sorts = plan.collect {
+      case s @ (_: SortExec | _: WindowExec | _: WindowGroupLimitExec) => s.nodeName
+    }
+    assert(sorts.isEmpty, s"transform sorts: $sorts\n${out.queryExecution.executedPlan}")
+    val scans = plan.collect {
+      case f: FileSourceScanExec
+        if f.relation.location.rootPaths.exists(_.toString.contains("listings.csv")) => f
+    }
+    assert(scans.size === 1, out.queryExecution.executedPlan.toString)
+    // observation-free: the state filter still reaches the CSV parser
+    assert(scans.head.dataFilters.nonEmpty, scans.head.toString)
   }
 
   test("run() itself retries like the Step Functions contract (x2 @60s, backoff 2.0)") {
@@ -222,7 +372,7 @@ class PipelineSpec extends SparkSpec {
     val back = spark.read.option("multiLine", "true")
       .option("pathGlobFilter", "part-*").json(out)
     assert(back.count() === census.count())
-    assert(back.select(census.columns.map(org.apache.spark.sql.functions.col): _*)
+    assert(back.select(census.columns.map(col): _*)
       .exceptAll(census).isEmpty)
   }
 
